@@ -1,8 +1,7 @@
 """JPEG decoder — pure python + numpy, no image library.
 
-Round 4: closes the JPEG leg of the multimodal pixel seam
-(operators/multimodal.py).  Scope: baseline sequential (SOF0/1) AND
-progressive (SOF2) huffman DCT JPEGs — together the web's JPEGs —
+Scope: baseline sequential (SOF0/1) AND progressive (SOF2) huffman
+DCT JPEGs — together the web's JPEGs —
 with spectral selection, successive approximation (DC and AC
 first/refinement scans, EOB runs), interleaved and single-component
 scan orders, restart markers, dequantize + vectorized float IDCT,
@@ -13,7 +12,9 @@ remaining seam, marked where the frame type is dispatched.
 
 No reference counterpart: the reference processes documents only
 (Services/FileProcessingService.cs:28-37 allowlists .txt/.md/.pdf/
-.docx); this is builder's-brief multimodal surface.
+.docx), and no pipeline stage, query or streaming path imports this
+module.  It is the last piece of the retired media stack and is
+slated for deletion together with its tests.
 """
 
 from __future__ import annotations

@@ -173,7 +173,11 @@ def hot_gram_stats(
     max_gram_df: int = 1000,
 ) -> DataFrame:
     """Observability for the gram-df cap (no silent truncation): the
-    grams ``ngram_jaccard_pairs`` dropped, with their block and df."""
+    grams ``ngram_jaccard_pairs`` dropped, with their block and df.
+
+    Postings with a NULL ``doc_id``, block or gram are excluded before
+    counting, exactly as ``ngram_jaccard_pairs`` excludes them, so a
+    gram's ``gram_df`` counts only non-null postings."""
     toks = F.filter(F.split(NORM(F.col(text_col)), " "), lambda t: t != "")
     grams = F.when(
         F.size(toks) >= n, F.array_distinct(_word_ngrams_col(toks, n))
@@ -760,8 +764,7 @@ def dedup_resolution(
     dictionary-sized pair lists, alternating large/small-star
     (Kiveris et al., SoCC'14) at crawl scale.  Composes with every pair
     family here (minhash_lsh_pairs_sql, simhash_near_dups,
-    ngram_jaccard_pairs, embedding_near_dups, exact_dedup via melt, and
-    the image/audio perceptual variants after a column rename).
+    ngram_jaccard_pairs, embedding_near_dups and exact_dedup via melt).
 
     Cluster sizes come from an aggregate + equi-join rather than a
     window (partial aggregation absorbs a giant boilerplate cluster

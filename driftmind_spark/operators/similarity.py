@@ -290,17 +290,19 @@ def ivf_topk(
     )
     c_assign = _ivf_assign_udf(cents, 1)
     q_assign = _ivf_assign_udf(cents, n_probe)
+    # norms from the aliased double vectors, as in brute_force_topk, so
+    # the cast runs once per row
     cb = corpus.select(
         "vec_id",
         _as_double("embedding").alias("cv"),
-        l2_norm(_as_double("embedding")).alias("cn"),
         c_assign("embedding")[0].alias("list_id"),
-    )
+    ).withColumn("cn", l2_norm(F.col("cv")))
     qb = queries.select(
         F.col("vec_id").alias("query_id"),
         _as_double("embedding").alias("qv"),
-        l2_norm(_as_double("embedding")).alias("qn"),
-        F.explode(q_assign("embedding")).alias("list_id"),
+        q_assign("embedding").alias("lists"),
+    ).withColumn("qn", l2_norm(F.col("qv"))).select(
+        "query_id", "qv", "qn", F.explode("lists").alias("list_id")
     )
     scored = (
         F.broadcast(qb)
@@ -338,18 +340,22 @@ def lsh_topk(
     (small) query side, so the corpus never shuffles; only matched
     candidate pairs hit the dedup exchange."""
     budf = _bucket_ids_udf(dim, n_planes, n_tables, seed)
+    # norms from the aliased double vectors, as in brute_force_topk, so
+    # the cast runs once per row
     qb = queries.select(
         F.col("vec_id").alias("query_id"),
         _as_double("embedding").alias("qv"),
-        l2_norm(_as_double("embedding")).alias("qn"),
         budf("embedding").alias("bks"),
-    ).select("query_id", "qv", "qn", F.posexplode("bks").alias("tbl", "bucket"))
+    ).withColumn("qn", l2_norm(F.col("qv"))).select(
+        "query_id", "qv", "qn", F.posexplode("bks").alias("tbl", "bucket")
+    )
     cb = corpus.select(
         "vec_id",
         _as_double("embedding").alias("cv"),
-        l2_norm(_as_double("embedding")).alias("cn"),
         budf("embedding").alias("bks"),
-    ).select("vec_id", "cv", "cn", F.posexplode("bks").alias("tbl", "bucket"))
+    ).withColumn("cn", l2_norm(F.col("cv"))).select(
+        "vec_id", "cv", "cn", F.posexplode("bks").alias("tbl", "bucket")
+    )
     cand = (
         F.broadcast(qb)
         .join(cb, ["tbl", "bucket"])

@@ -99,6 +99,31 @@ def test_registry_at_driver_recording_cap():
     assert set(ORACLES) <= set(QUERIES)
 
 
+@pytest.mark.parametrize("scan_parts, spreads", [(1, True), (4, False)])
+def test_spread_falls_back_to_scan_partitions(tmp_path, scan_parts, spreads):
+    """When the row-group probe cannot read an input (a non-local store,
+    or a local file that is not parquet), ``_spread`` decides from the
+    scan's own partition count instead of assuming the input splits."""
+    from unittest import mock
+
+    junk = tmp_path / "junk.parquet"
+    junk.write_bytes(b"not parquet")
+    spark = mock.Mock()
+    spark.sparkContext.defaultParallelism = 8
+    for path in ("s3a://bucket/t.parquet", f"file:{junk}"):
+        df = mock.Mock()
+        df.inputFiles.return_value = [path]
+        df.rdd.getNumPartitions.return_value = scan_parts
+        with mock.patch.dict(entry_mod._SPREAD_CACHE, clear=True):
+            out = entry_mod._spread(spark, df)
+        if spreads:
+            df.repartition.assert_called_once_with(8)
+            assert out is df.repartition.return_value
+        else:
+            df.repartition.assert_not_called()
+            assert out is df
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()

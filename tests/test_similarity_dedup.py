@@ -2,6 +2,8 @@
 LSH recall vs brute-force on clustered and weakly-separated data, and
 planted near-duplicate detection for each dedup variant."""
 
+import struct
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -725,9 +727,8 @@ def test_corpus_dedup_idempotent(spark):
 
 
 def test_dedup_resolution_string_ids(spark):
-    """The documented composition with the perceptual pair families:
-    STRING media ids must flow through the CC driver path (its label
-    schema follows the vertex id type — round-4 review fix)."""
+    """STRING doc ids must flow through the CC driver path (its label
+    schema follows the vertex id type)."""
     docs = spark.createDataFrame(
         [(f"m{i}",) for i in range(6)], "media_id string"
     )
@@ -875,6 +876,9 @@ def test_hoisted_norm_cosine_bit_identical(spark):
             ).alias("c"),
         )
     )
-    got_i = {r["id"]: r["c"] for r in inline.collect()}
-    got_h = {r["id"]: r["c"] for r in hoisted.collect()}
-    assert got_i == got_h  # exact float equality, no tolerance
+    def bits(frame):
+        # IEEE-754 bytes: exact, and NaN matches NaN (dict == would not)
+        return {r["id"]: None if r["c"] is None else struct.pack("<d", r["c"])
+                for r in frame.collect()}
+
+    assert bits(inline) == bits(hoisted)

@@ -1,4 +1,9 @@
-"""Structured Streaming pipeline + multimodal plumbing tests."""
+"""Structured Streaming pipeline tests: micro-batch chunking, watermarked
+counts, the stateful near-dup gate, composed ingest and KG snapshots.
+
+The media tests that once shared this module went with the media
+operators; the module keeps its name so the streaming test ids stay
+stable."""
 
 import glob
 import os
@@ -6,7 +11,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from driftmind_spark.operators.multimodal import media_metadata, sample_frames
 from driftmind_spark.streaming.stream import (
     read_pages_stream,
     stream_chunks,
@@ -111,44 +115,6 @@ def test_stream_dedupe_pages(spark, stream_corpus, tmp_path_factory):
     assert res.groupBy("url").count().filter(F.col("count") > 1).count() == 0
 
 
-# ---- multimodal ----------------------------------------------------------------
-
-@pytest.fixture(scope="module")
-def media_df(spark):
-    import struct
-
-    png = (b"\x89PNG\r\n\x1a\n" + b"\x00\x00\x00\rIHDR"
-           + struct.pack(">II", 640, 480) + b"\x00" * 100)
-    jpg = b"\xff\xd8\xff\xe0" + b"j" * 3000
-    raw = b"\x01\x02" * 2500
-    return spark.createDataFrame(
-        [("m1", bytearray(png)), ("m2", bytearray(jpg)), ("m3", bytearray(raw))],
-        "media_id string, blob binary",
-    )
-
-
-def test_media_metadata(spark, media_df):
-    meta = {r["media_id"]: r for r in media_metadata(media_df).collect()}
-    assert meta["m1"]["format"] == "png"
-    assert meta["m1"]["width"] == 640 and meta["m1"]["height"] == 480
-    assert meta["m2"]["format"] == "jpeg"
-    assert meta["m2"]["width"] is None  # SOF-less jpeg -> NULL, not crash
-    assert meta["m3"]["format"] is None
-    assert all(len(r["sha"]) == 64 for r in meta.values())
-
-
-def test_sample_frames_shape(spark, media_df):
-    frames = sample_frames(media_df, every_n_bytes=1024, max_frames=3)
-    pdf = frames.toPandas()
-    # one input row -> up to K frame rows
-    assert set(pdf["media_id"]) == {"m1", "m2", "m3"}
-    m2 = pdf[pdf.media_id == "m2"]
-    assert list(m2["frame_index"]) == [0, 1]  # 3004 bytes -> 2 frames
-    assert len(bytes(m2.iloc[0]["frame"])) == 1024
-    # undecodable (SOF-less jpeg) -> byte-range stand-in, marked as such
-    assert set(m2["kind"]) == {"bytes"}
-
-
 def test_stream_new_versions_stateful_gate(spark, tmp_path_factory):
     """applyInPandasWithState custom operator: per-url persistent state
     emits only strictly-newer versions with increasing version numbers;
@@ -213,49 +179,6 @@ def test_stream_new_versions_stateful_gate(spark, tmp_path_factory):
     batch = new_versions_batch(spark.read.parquet(src))
     assert batch.filter("url = 'u3'").count() == 1
     assert batch.filter("url = 'u1'").count() == 4  # includes the late row
-
-
-def test_media_metadata_stdlib_decoders(spark):
-    """Round-3 pure-stdlib header decoders: JPEG SOF scan, GIF logical
-    screen descriptor, WAV fmt/data chunks, MP4 mvhd duration — real
-    values, no image/audio library."""
-    import struct
-
-    # minimal JPEG: SOI, APP0 (16 bytes), SOF0 with h=33 w=49, EOI
-    jpeg = (b"\xff\xd8"
-            + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-            + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-            + struct.pack(">HH", 33, 49) + b"\x03" + b"\x00" * 9
-            + b"\xff\xd9")
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 20
-    # WAV: 2ch 8000Hz 16-bit -> byte_rate 32000; 16000-byte data = 500ms
-    wav = (b"RIFF" + struct.pack("<I", 36 + 16000) + b"WAVE"
-           + b"fmt " + struct.pack("<I", 16)
-           + struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
-           + b"data" + struct.pack("<I", 16000) + b"\x00" * 16000)
-    # MP4: ftyp box + moov{mvhd v0 timescale=1000 duration=2500}
-    mvhd = (b"mvhd" + b"\x00\x00\x00\x00"
-            + struct.pack(">II", 0, 0) + struct.pack(">II", 1000, 2500)
-            + b"\x00" * 80)
-    mvhd_box = struct.pack(">I", 4 + len(mvhd)) + mvhd  # mvhd holds type+payload
-    moov = struct.pack(">I", 8 + len(mvhd_box)) + b"moov" + mvhd_box
-    mp4 = struct.pack(">I", 20) + b"ftypisom" + b"\x00" * 8 + moov
-
-    df = spark.createDataFrame(
-        [("j", bytearray(jpeg)), ("g", bytearray(gif)),
-         ("w", bytearray(wav)), ("v", bytearray(mp4))],
-        "media_id string, blob binary",
-    )
-    meta = {r["media_id"]: r for r in media_metadata(df).collect()}
-    assert meta["j"]["format"] == "jpeg"
-    assert (meta["j"]["width"], meta["j"]["height"]) == (49, 33)
-    assert meta["g"]["format"] == "gif"
-    assert (meta["g"]["width"], meta["g"]["height"]) == (320, 200)
-    assert meta["w"]["format"] == "wav"
-    assert meta["w"]["duration_ms"] == 500
-    assert meta["w"]["sample_rate"] == 8000 and meta["w"]["channels"] == 2
-    assert meta["v"]["format"] == "mp4"
-    assert meta["v"]["duration_ms"] == 2500
 
 
 def test_stream_near_dups_flags_planted_clones(spark, tmp_path_factory):
@@ -457,1108 +380,6 @@ def test_stream_sink_retry_is_idempotent(spark, stream_corpus, tmp_path_factory)
     assert after.count() == n_before, "retried batch duplicated rows"
     # batch 0's partition untouched
     assert after.filter(F.col("batch_id") == 0).count() == 20
-
-
-# ---- round 4: real PNG pixel decode (stdlib zlib) -------------------------
-
-_ADAM7 = (
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-)
-
-
-def _filter_scanlines(flat, bpp, filters):
-    """Filter a (h, w*bpp) BYTE matrix with the requested per-row filter
-    types (inverse of the decoder's equations, raw neighbor bytes per
-    the PNG spec)."""
-    import numpy as np
-
-    raw = bytearray()
-    prev = np.zeros(flat.shape[1], dtype=np.int32)
-    for y in range(flat.shape[0]):
-        f = filters[y % len(filters)]
-        cur = flat[y].astype(np.int32)
-        left = np.roll(cur, bpp)
-        left[:bpp] = 0
-        ul = np.roll(prev, bpp)
-        ul[:bpp] = 0
-        if f == 0:
-            enc = cur
-        elif f == 1:
-            enc = (cur - left) & 0xFF
-        elif f == 2:
-            enc = (cur - prev) & 0xFF
-        elif f == 3:
-            enc = (cur - ((left + prev) >> 1)) & 0xFF
-        elif f == 4:
-            p = left + prev - ul
-            pa, pb, pc = abs(p - left), abs(p - prev), abs(p - ul)
-            pred = np.where((pa <= pb) & (pa <= pc), left,
-                            np.where(pb <= pc, prev, ul))
-            enc = (cur - pred) & 0xFF
-        raw.append(f)
-        raw.extend(enc.astype(np.uint8).tobytes())
-        prev = cur
-    return raw
-
-
-def _encode_png(pixels, filters, color_type=2, palette=None,
-                interlace=False, depth=8):
-    """Tiny independent PNG encoder for the test: filters each scanline
-    with the REQUESTED filter type, deflates, and wraps in chunks.  Lets
-    the test pin every filter path of decode_png_pixels against known
-    pixel values.  ``interlace=True`` writes Adam7 passes (each pass an
-    independently filtered sub-image); ``depth=16`` takes uint16 pixels
-    and writes big-endian sample pairs."""
-    import struct as st
-    import zlib
-
-    import numpy as np
-
-    pack = None
-    if depth == 16:
-        arr = np.asarray(pixels, dtype=np.uint16)
-        h, w, c = arr.shape
-        bpp = c * 2
-        flat = np.zeros((h, w * c * 2), dtype=np.uint8)
-        flat[:, 0::2] = (arr.reshape(h, w * c) >> 8).astype(np.uint8)
-        flat[:, 1::2] = (arr.reshape(h, w * c) & 0xFF).astype(np.uint8)
-    elif depth < 8:
-        # sub-byte gray/palette: pack samples MSB-first per scanline
-        arr = np.asarray(pixels, dtype=np.uint8)
-        h, w = arr.shape
-        bpp = 1
-
-        def pack(p2d):
-            ph, pw = p2d.shape
-            bits = ((p2d[:, :, None] >> np.arange(depth - 1, -1, -1)) & 1)
-            return np.packbits(bits.reshape(ph, pw * depth).astype(np.uint8),
-                               axis=1)
-
-        flat = pack(arr)
-    elif color_type == 3:
-        arr = np.asarray(pixels, dtype=np.uint8)
-        h, w = arr.shape
-        bpp = 1
-        flat = arr.reshape(h, w)
-    else:
-        arr = np.asarray(pixels, dtype=np.uint8)
-        h, w, c = arr.shape
-        bpp = c
-        flat = arr.reshape(h, w * c)
-
-    if interlace:
-        raw = bytearray()
-        for x0, y0, dx, dy in _ADAM7:
-            if pack is not None:
-                sub = arr[y0::dy, x0::dx]
-                ph, pw = sub.shape
-                if ph == 0 or pw == 0:
-                    continue
-                raw += _filter_scanlines(pack(sub), 1, filters)
-            else:
-                sub = flat.reshape(h, w, bpp)[y0::dy, x0::dx]
-                ph, pw = sub.shape[:2]
-                if ph == 0 or pw == 0:
-                    continue
-                raw += _filter_scanlines(sub.reshape(ph, pw * bpp), bpp,
-                                         filters)
-    else:
-        raw = _filter_scanlines(flat, bpp, filters)
-
-    def chunk(ctype, body):
-        return (st.pack(">I", len(body)) + ctype + body
-                + st.pack(">I", zlib.crc32(ctype + body)))
-
-    ihdr = st.pack(">IIBBBBB", w, h, depth, color_type, 0, 0,
-                   1 if interlace else 0)
-    out = b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-    if palette is not None:
-        out += chunk(b"PLTE", bytes(palette))
-    out += chunk(b"IDAT", zlib.compress(bytes(raw)))
-    out += chunk(b"IEND", b"")
-    return out
-
-
-def test_png_pixel_decode_all_filters():
-    """decode_png_pixels must invert every PNG scanline filter exactly."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_png_pixels
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, size=(10, 7, 3), dtype=np.uint8)
-    png = _encode_png(img, filters=[0, 1, 2, 3, 4, 4, 3, 2, 1, 0])
-    got = decode_png_pixels(png)
-    assert got.shape == (10, 7, 3)
-    assert np.array_equal(got, img)
-
-
-def test_png_pixel_decode_palette_and_rgba():
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_png_pixels
-
-    # palette: indices expand through PLTE to RGB
-    idx = np.array([[0, 1, 2, 1], [2, 2, 0, 0]], dtype=np.uint8)
-    pal = [255, 0, 0, 0, 255, 0, 0, 0, 255]  # R, G, B entries
-    png = _encode_png(idx, filters=[1, 2], color_type=3, palette=pal)
-    got = decode_png_pixels(png)
-    expect = np.array(pal, dtype=np.uint8).reshape(3, 3)[idx]
-    assert np.array_equal(got, expect)
-
-    # RGBA round-trip (color type 6, 4 channels)
-    rng = np.random.RandomState(5)
-    rgba = rng.randint(0, 256, size=(6, 4, 4), dtype=np.uint8)
-    got4 = decode_png_pixels(_encode_png(rgba, filters=[4, 3], color_type=6))
-    assert np.array_equal(got4, rgba)
-
-
-def test_png_adam7_interlaced_decode():
-    """Round 5 (was a NotImplementedError seam): Adam7 passes are
-    independently filtered sub-images scattered by stride — pin against
-    the independent interlacing encoder, across sizes that exercise
-    empty and single-pixel passes."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_png_pixels
-
-    rng = np.random.RandomState(17)
-    for h, w, ct, c in [(16, 16, 2, 3), (10, 7, 2, 3), (9, 13, 6, 4),
-                        (3, 3, 0, 1), (1, 1, 2, 3), (2, 9, 4, 2)]:
-        shape = (h, w, c)
-        img = rng.randint(0, 256, size=shape, dtype=np.uint8)
-        png = _encode_png(img, filters=[0, 1, 2, 3, 4], color_type=ct,
-                          interlace=True)
-        got = decode_png_pixels(png)
-        assert np.array_equal(got, img), f"interlaced {h}x{w} ct={ct}"
-
-
-def test_png_16bit_decode():
-    """16-bit samples are big-endian pairs filtered at bpp = 2*channels;
-    decode downsamples to the high byte (standard 16->8)."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_png_pixels
-
-    rng = np.random.RandomState(23)
-    img16 = rng.randint(0, 65536, size=(9, 6, 3), dtype=np.uint16)
-    png = _encode_png(img16, filters=[0, 1, 2, 3, 4], depth=16)
-    got = decode_png_pixels(png)
-    assert np.array_equal(got, (img16 >> 8).astype(np.uint8))
-
-    # 16-bit AND interlaced together
-    img16b = rng.randint(0, 65536, size=(11, 5, 4), dtype=np.uint16)
-    png_i = _encode_png(img16b, filters=[4, 3, 2, 1, 0], color_type=6,
-                        depth=16, interlace=True)
-    assert np.array_equal(
-        decode_png_pixels(png_i), (img16b >> 8).astype(np.uint8)
-    )
-
-
-def test_png_subbyte_depths_decode():
-    """Round 5 (closes the last PNG seam): 1/2/4-bit gray and palette
-    images — MSB-first packed samples, byte-granularity filtering,
-    gray levels scaled to 8-bit, incl. widths that leave padding bits
-    in the final byte and Adam7 interlace."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_png_pixels
-
-    rng = np.random.RandomState(29)
-    for depth in (1, 2, 4):
-        scale = 255 // ((1 << depth) - 1)
-        # width 11 -> padded final byte at every depth
-        img = rng.randint(0, 1 << depth, size=(7, 11), dtype=np.uint8)
-        png = _encode_png(img, filters=[0, 1, 2, 3, 4], color_type=0,
-                          depth=depth)
-        got = decode_png_pixels(png)
-        assert got.shape == (7, 11, 1), f"depth {depth}"
-        assert np.array_equal(got[..., 0], img * scale), f"depth {depth}"
-        # interlaced variant
-        png_i = _encode_png(img, filters=[2, 4, 0], color_type=0,
-                            depth=depth, interlace=True)
-        assert np.array_equal(
-            decode_png_pixels(png_i)[..., 0], img * scale
-        ), f"interlaced depth {depth}"
-
-    # 4-bit palette: indices expand through PLTE
-    idx = rng.randint(0, 5, size=(6, 9), dtype=np.uint8)
-    pal = list(rng.randint(0, 256, size=15))
-    png_p = _encode_png(idx, filters=[1, 3], color_type=3, palette=pal,
-                        depth=4)
-    got_p = decode_png_pixels(png_p)
-    expect = np.array(pal, dtype=np.uint8).reshape(5, 3)[idx]
-    assert np.array_equal(got_p, expect)
-
-
-def test_png_subbyte_rgb_rejected():
-    import struct as st
-    import zlib
-
-    import pytest as _pytest
-
-    from driftmind_spark.operators.multimodal import decode_png_pixels
-
-    def chunk(ctype, body):
-        return (st.pack(">I", len(body)) + ctype + body
-                + st.pack(">I", zlib.crc32(ctype + body)))
-
-    bad = (b"\x89PNG\r\n\x1a\n"
-           + chunk(b"IHDR", st.pack(">IIBBBBB", 4, 4, 4, 2, 0, 0, 0))
-           + chunk(b"IDAT", zlib.compress(b"\x00" * 10)))
-    with _pytest.raises(ValueError, match="gray/palette"):
-        decode_png_pixels(bad)
-
-
-def test_sample_frames_real_png_pixels(spark):
-    """End-to-end through Spark: a real PNG blob must come back as
-    horizontal bands of DECODED pixel bytes, not byte-range slices."""
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, size=(8, 5, 3), dtype=np.uint8)
-    png = _encode_png(img, filters=[0, 1, 2, 3, 4, 0, 2, 4])
-    df = spark.createDataFrame(
-        [("p1", bytearray(png))], "media_id string, blob binary"
-    )
-    rows = sample_frames(df, max_frames=4).collect()
-    frames = {r["frame_index"]: bytes(r["frame"]) for r in rows}
-    assert len(frames) == 4  # 8 rows / 4 frames = 2-row bands
-    for i in range(4):
-        assert frames[i] == img[2 * i:2 * i + 2].tobytes()
-    # decoded output is self-describing (round 5)
-    assert all(r["kind"] == "pixels" for r in rows)
-
-
-# ---- round 4: real GIF pixel decode (pure-python LZW) ---------------------
-
-def _lzw_encode(indices, min_code):
-    """Reference GIF-LZW encoder for the test (independent of the
-    decoder): standard dictionary growth, variable width growing when
-    the next code would not fit, 12-bit cap with clear-code reset."""
-    clear = 1 << min_code
-    end = clear + 1
-    emitted = []  # (code, width) pairs
-
-    def fresh():
-        return {bytes([i]): i for i in range(clear)}, end + 1, min_code + 1
-
-    table, next_code, width = fresh()
-    emitted.append((clear, width))
-    prev = b""
-    for px in indices:
-        cur = prev + bytes([px])
-        if cur in table:
-            prev = cur
-            continue
-        emitted.append((table[prev], width))
-        table[cur] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << width) and width < 12:
-            width += 1
-        elif next_code - 1 == (1 << 12):
-            emitted.append((clear, width))
-            table, next_code, width = fresh()
-        prev = bytes([px])
-    if prev:
-        emitted.append((table[prev], width))
-    emitted.append((end, width))
-    # pack LSB-first
-    acc = 0
-    nbits = 0
-    out = bytearray()
-    for code, w in emitted:
-        acc |= code << nbits
-        nbits += w
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _encode_gif(idx, palette, min_code=None, interlace=False):
-    """Minimal single-image GIF89a writer for the test."""
-    import struct as st
-
-    import numpy as np
-
-    idx = np.asarray(idx, dtype=np.uint8)
-    h, w = idx.shape
-    n_colors = len(palette) // 3
-    ct_bits = max(1, (n_colors - 1).bit_length())
-    ct = bytes(palette) + b"\x00" * (3 * ((1 << ct_bits) - n_colors))
-    if min_code is None:
-        min_code = max(2, ct_bits)
-    rows = idx
-    if interlace:
-        order = [*range(0, h, 8), *range(4, h, 8),
-                 *range(2, h, 4), *range(1, h, 2)]
-        rows = idx[order]
-    data = _lzw_encode(rows.reshape(-1).tolist(), min_code)
-    out = bytearray()
-    out += b"GIF89a" + st.pack("<HH", w, h)
-    out.append(0x80 | (ct_bits - 1))  # GCT present
-    out += b"\x00\x00" + ct
-    # a skippable extension, to exercise the walker
-    out += b"\x21\xfe" + bytes([5]) + b"hello" + b"\x00"
-    out += b"\x2c" + st.pack("<HHHH", 0, 0, w, h)
-    out.append(0x40 if interlace else 0x00)
-    out.append(min_code)
-    for i in range(0, len(data), 200):
-        blk = data[i:i + 200]
-        out.append(len(blk))
-        out += blk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def _encode_gif_anim(W, H, palette, bg_idx, frames, delay_cs=7):
-    """Animated GIF89a writer for the test: ``frames`` is a list of
-    (x0, y0, idx2d, disposal, trans_idx_or_None), each preceded by a
-    graphic-control extension carrying ``delay_cs``."""
-    import struct as st
-
-    import numpy as np
-
-    n_colors = len(palette) // 3
-    ct_bits = max(1, (n_colors - 1).bit_length())
-    ct = bytes(palette) + b"\x00" * (3 * ((1 << ct_bits) - n_colors))
-    min_code = max(2, ct_bits)
-    out = bytearray()
-    out += b"GIF89a" + st.pack("<HH", W, H)
-    out.append(0x80 | (ct_bits - 1))
-    out.append(bg_idx)
-    out += b"\x00" + ct
-    for x0, y0, idx, disposal, trans in frames:
-        idx = np.asarray(idx, dtype=np.uint8)
-        h, w = idx.shape
-        packed = (disposal << 2) | (1 if trans is not None else 0)
-        out += (b"\x21\xf9"
-                + bytes([4, packed, delay_cs & 0xFF, delay_cs >> 8,
-                         trans or 0])
-                + b"\x00")
-        out += b"\x2c" + st.pack("<HHHH", x0, y0, w, h) + b"\x00"
-        out.append(min_code)
-        data = _lzw_encode(idx.reshape(-1).tolist(), min_code)
-        for i in range(0, len(data), 200):
-            blk = data[i:i + 200]
-            out.append(len(blk))
-            out += blk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
-
-
-def test_gif_animated_frames_compose(spark):
-    """decode_gif_frames (round 5): full-canvas composition with
-    transparency and disposal 2 (restore background), checked against a
-    hand-composed expectation; sample_frames emits the temporal frames."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_gif_frames
-
-    pal = [10, 20, 30,   200, 0, 0,   0, 200, 0,   0, 0, 200]  # bg,R,G,B
-    W, H = 8, 6
-    f0 = np.full((6, 8), 1, dtype=np.uint8)          # full red
-    f1 = np.full((3, 4), 2, dtype=np.uint8)          # green patch at (2,1)
-    f1[1, 1] = 0                                     # transparent hole
-    f2 = np.full((2, 2), 3, dtype=np.uint8)          # blue patch at (5,3)
-    gif = _encode_gif_anim(W, H, pal, 0, [
-        (0, 0, f0, 1, None),   # leave
-        (2, 1, f1, 2, 0),      # transparent idx 0, then restore bg
-        (5, 3, f2, 0, None),
-    ])
-    frames = decode_gif_frames(gif, max_frames=8)
-    assert len(frames) == 3
-
-    c = np.zeros((H, W, 3), dtype=np.uint8)
-    c[:] = (10, 20, 30)
-    c[:, :] = (200, 0, 0)
-    assert np.array_equal(frames[0], c)
-    c1 = c.copy()
-    c1[1:4, 2:6] = (0, 200, 0)
-    c1[2, 3] = (200, 0, 0)     # transparent hole keeps frame-0 pixel
-    assert np.array_equal(frames[1], c1)
-    c2 = c.copy()              # disposal 2 restored the patch to bg
-    c2[1:4, 2:6] = (10, 20, 30)
-    c2[3:5, 5:7] = (0, 0, 200)
-    assert np.array_equal(frames[2], c2)
-
-    # through the Spark operator: temporal frames, kind=pixels
-    df = spark.createDataFrame(
-        [("g1", bytearray(gif))], "media_id string, blob binary"
-    )
-    rows = sample_frames(df, max_frames=8).collect()
-    assert len(rows) == 3 and {r["kind"] for r in rows} == {"pixels"}
-    got = {r["frame_index"]: bytes(r["frame"]) for r in rows}
-    for i, fr in enumerate(frames):
-        assert got[i] == fr.tobytes()
-
-    # animated duration from summed GCE delays (3 frames x 7 cs)
-    meta = media_metadata(df).collect()[0]
-    assert meta["format"] == "gif"
-    assert (meta["width"], meta["height"]) == (W, H)
-    assert meta["duration_ms"] == 3 * 7 * 10
-
-
-def test_gif_pixel_decode_roundtrip():
-    """LZW dictionary growth + palette expansion: random index images at
-    several sizes/palettes must round-trip exactly."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_gif_pixels
-
-    rng = np.random.RandomState(13)
-    for h, w, n_colors in [(9, 13, 4), (16, 16, 16), (23, 31, 200)]:
-        idx = rng.randint(0, n_colors, size=(h, w)).astype(np.uint8)
-        pal = list(rng.randint(0, 256, size=3 * n_colors))
-        got = decode_gif_pixels(_encode_gif(idx, pal))
-        expect = np.array(pal, dtype=np.uint8).reshape(-1, 3)[idx]
-        assert got.shape == (h, w, 3)
-        assert np.array_equal(got, expect)
-
-
-def test_gif_pixel_decode_interlaced():
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_gif_pixels
-
-    rng = np.random.RandomState(17)
-    idx = rng.randint(0, 8, size=(19, 11)).astype(np.uint8)
-    pal = list(rng.randint(0, 256, size=24))
-    got = decode_gif_pixels(_encode_gif(idx, pal, interlace=True))
-    expect = np.array(pal, dtype=np.uint8).reshape(-1, 3)[idx]
-    assert np.array_equal(got, expect)
-
-
-def test_gif_lzw_dictionary_pressure():
-    """A long low-entropy stream forces many width growths; decode must
-    still be exact (hits the 9->12 bit code widths)."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_gif_pixels
-
-    rng = np.random.RandomState(29)
-    h, w = 64, 101
-    # repetitive structure -> long dictionary entries
-    base = rng.randint(0, 7, size=w)
-    idx = np.stack([np.roll(base, i % 5) for i in range(h)]).astype(np.uint8)
-    pal = list(rng.randint(0, 256, size=21))
-    got = decode_gif_pixels(_encode_gif(idx, pal))
-    expect = np.array(pal, dtype=np.uint8).reshape(-1, 3)[idx]
-    assert np.array_equal(got, expect)
-
-
-def test_sample_frames_real_gif_pixels(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(23)
-    idx = rng.randint(0, 5, size=(6, 7)).astype(np.uint8)
-    pal = list(rng.randint(0, 256, size=15))
-    gif = _encode_gif(idx, pal)
-    df = spark.createDataFrame(
-        [("g1", bytearray(gif))], "media_id string, blob binary"
-    )
-    frames = {r["frame_index"]: bytes(r["frame"])
-              for r in sample_frames(df, max_frames=3).collect()}
-    expect = np.array(pal, dtype=np.uint8).reshape(-1, 3)[idx]
-    assert len(frames) == 3  # 6 rows over 3 frames = 2-row bands
-    for i in range(3):
-        assert frames[i] == expect[2 * i:2 * i + 2].tobytes()
-
-
-def test_sample_frames_real_jpeg_pixels(spark):
-    """Baseline JPEG through Spark: frames must be decoded pixel bands
-    (exact match against a direct decode of the same bytes)."""
-    import numpy as np
-
-    from driftmind_spark.kernels.imagecodec import decode_jpeg_pixels
-    from tests.test_jpeg_codec import _encode_jpeg
-
-    rng = np.random.RandomState(59)
-    img = rng.randint(0, 256, size=(12, 9, 3)).astype(np.uint8)
-    data = _encode_jpeg(img)
-    expect = decode_jpeg_pixels(data)
-    df = spark.createDataFrame(
-        [("j1", bytearray(data))], "media_id string, blob binary"
-    )
-    frames = {r["frame_index"]: bytes(r["frame"])
-              for r in sample_frames(df, max_frames=4).collect()}
-    assert len(frames) == 4  # 12 rows over 4 frames = 3-row bands
-    for i in range(4):
-        assert frames[i] == expect[3 * i:3 * i + 3].tobytes()
-
-
-# ---- round 4: real PCM WAV sample decode ----------------------------------
-
-def _encode_wav(samples, rate, tag=1, bits=16):
-    """Minimal RIFF/WAVE writer for the test (fmt + data chunks)."""
-    import struct as st
-
-    import numpy as np
-
-    arr = np.asarray(samples)
-    channels = arr.shape[1] if arr.ndim == 2 else 1
-    if tag == 1 and bits == 16:
-        payload = arr.astype("<i2").tobytes()
-    elif tag == 1 and bits == 8:
-        payload = ((arr.astype(np.int32) >> 8) + 128).astype(np.uint8).tobytes()
-    elif tag == 3 and bits == 32:
-        payload = (arr.astype(np.float64) / 32767.0).astype("<f4").tobytes()
-    else:
-        raise ValueError
-    byte_rate = rate * channels * bits // 8
-    fmt = st.pack("<HHIIHH", tag, channels, rate, byte_rate,
-                  channels * bits // 8, bits)
-    out = b"RIFF" + st.pack("<I", 4 + 8 + len(fmt) + 8 + len(payload)) + b"WAVE"
-    out += b"fmt " + st.pack("<I", len(fmt)) + fmt
-    out += b"data" + st.pack("<I", len(payload)) + payload
-    return out
-
-
-def test_wav_sample_decode_pcm16_and_float():
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_wav_samples
-
-    rng = np.random.RandomState(61)
-    stereo = rng.randint(-32768, 32767, size=(500, 2)).astype(np.int16)
-    got, rate = decode_wav_samples(_encode_wav(stereo, 8000))
-    assert rate == 8000
-    assert np.array_equal(got, stereo)
-
-    # float32 path round-trips within 1 LSB of int16
-    got_f, _ = decode_wav_samples(_encode_wav(stereo, 44100, tag=3, bits=32))
-    assert np.abs(got_f.astype(int) - stereo.astype(int)).max() <= 1
-
-
-def test_wav_sample_decode_unsupported_raises():
-    import struct as st
-
-    import pytest as _pytest
-
-    from driftmind_spark.operators.multimodal import decode_wav_samples
-
-    # mp3-in-wav (tag 0x55) stays the honest compressed-audio seam
-    fmt = st.pack("<HHIIHH", 0x55, 1, 8000, 8000, 1, 0)
-    data = (b"RIFF" + st.pack("<I", 36) + b"WAVE"
-            + b"fmt " + st.pack("<I", len(fmt)) + fmt
-            + b"data" + st.pack("<I", 4) + b"\x00" * 4)
-    with _pytest.raises(NotImplementedError, match="format tag 85"):
-        decode_wav_samples(data)
-
-
-def test_sample_frames_real_wav_samples(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(67)
-    mono = rng.randint(-1000, 1000, size=(40, 1)).astype(np.int16)
-    wav = _encode_wav(mono, 16000)
-    df = spark.createDataFrame(
-        [("w1", bytearray(wav))], "media_id string, blob binary"
-    )
-    rows = sample_frames(df, max_frames=4).collect()
-    frames = {r["frame_index"]: bytes(r["frame"]) for r in rows}
-    assert len(frames) == 4  # 40 sample frames over 4 bands of 10
-    for i in range(4):
-        assert frames[i] == mono[10 * i:10 * i + 10].tobytes()
-    assert all(r["kind"] == "audio" for r in rows)
-
-
-# ---- round 4: perceptual image hashing + image near-dups ------------------
-
-def _structured_image(seed, h=64, w=64):
-    """Low-frequency synthetic picture (gradients + a rectangle) — the
-    kind of content pHash is built for; pure noise has no perceptual
-    structure to hash."""
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    yy, xx = np.mgrid[0:h, 0:w]
-    a, b, c = rng.uniform(0.3, 3, 3)
-    img = (
-        128
-        + 90 * np.sin(a * np.pi * yy / h + b)
-        + 70 * np.cos(c * np.pi * xx / w)
-    )
-    y0, x0 = rng.randint(5, h // 2), rng.randint(5, w // 2)
-    img[y0:y0 + h // 3, x0:x0 + w // 3] += rng.choice([-70, 70])
-    img = np.clip(img, 0, 255)
-    return np.stack([img, np.clip(img + 12, 0, 255),
-                     np.clip(img - 9, 0, 255)], axis=2).astype(np.uint8)
-
-
-def test_phash_stable_across_encodings_and_discriminative():
-    """The same picture encoded as PNG and as (lossy) JPEG must hash
-    within a few bits; different pictures must be far apart."""
-    from driftmind_spark.operators.multimodal import (
-        decode_image_pixels,
-        phash64,
-    )
-    from tests.test_jpeg_codec import _encode_jpeg
-
-    def ham(a, b):
-        return bin(a ^ b).count("1")
-
-    hashes = []
-    for seed in range(6):
-        img = _structured_image(seed)
-        png = _encode_png(img, filters=[0, 1, 2, 3, 4])
-        jpg = _encode_jpeg(img)
-        h_png = phash64(decode_image_pixels(png))
-        h_jpg = phash64(decode_image_pixels(jpg))
-        assert ham(h_png, h_jpg) <= 4, f"seed {seed}: {ham(h_png, h_jpg)}"
-        hashes.append(h_png)
-    dists = [ham(a, b) for i, a in enumerate(hashes)
-             for b in hashes[i + 1:]]
-    assert min(dists) >= 12, f"unrelated images too close: {min(dists)}"
-
-
-def test_image_near_dups_spark(spark):
-    """End-to-end: PNG + JPEG re-encodes of the same pictures pair up;
-    unrelated pictures don't; undecodable blobs are skipped as NULL."""
-    from driftmind_spark.operators.multimodal import image_near_dups
-    from tests.test_jpeg_codec import _encode_jpeg
-
-    rows = []
-    for seed in range(4):
-        img = _structured_image(seed)
-        rows.append((f"png{seed}", bytearray(_encode_png(img, filters=[0, 2]))))
-        rows.append((f"jpg{seed}", bytearray(_encode_jpeg(img))))
-    rows.append(("junk", bytearray(b"\x00\x01\x02" * 100)))
-    df = spark.createDataFrame(rows, "media_id string, blob binary")
-    pairs = {(r["media_a"], r["media_b"])
-             for r in image_near_dups(df, max_hamming=6).collect()}
-    expect = {tuple(sorted((f"jpg{s}", f"png{s}"))) for s in range(4)}
-    assert pairs == expect, pairs
-
-
-# ---- round 4: audio fingerprinting + audio near-dups ----------------------
-
-def _tone_mix(seed, n=8000, rate=8000):
-    """Synthetic 1-second recording: a few random tones with a random
-    on/off envelope — structured content for the fingerprint."""
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    t = np.arange(n) / rate
-    sig = np.zeros(n)
-    for _ in range(3):
-        f = rng.uniform(100, 3500)
-        # piecewise amplitude, never fully silent: a silent slice has
-        # no defined spectral content, so its bit is noise under any
-        # fingerprint — real audio dedup gates on energy instead
-        env = np.repeat(rng.uniform(0.2, 1.0, size=32), -(-n // 32))[:n]
-        sig += env * np.sin(2 * np.pi * f * t)
-    sig /= max(1e-9, np.abs(sig).max())
-    return (sig * 20000).astype(np.int16)[:, None]
-
-
-def test_audio_fingerprint_volume_invariant_and_discriminative():
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import audio_fingerprint64
-
-    def ham(a, b):
-        return bin(a ^ b).count("1")
-
-    fps = []
-    for seed in range(5):
-        s = _tone_mix(seed)
-        f_full = audio_fingerprint64(s, 8000)
-        f_half = audio_fingerprint64((s // 2).astype(np.int16), 8000)
-        assert ham(f_full, f_half) <= 2, f"volume changed the hash: seed {seed}"
-        noisy = np.clip(
-            s.astype(int)
-            + np.random.RandomState(99).randint(-300, 300, size=s.shape),
-            -32768, 32767,
-        ).astype(np.int16)
-        assert ham(f_full, audio_fingerprint64(noisy, 8000)) <= 6
-        fps.append(f_full)
-    dists = [ham(a, b) for i, a in enumerate(fps) for b in fps[i + 1:]]
-    assert min(dists) >= 10, f"unrelated audio too close: {min(dists)}"
-
-
-def test_audio_near_dups_spark(spark):
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import audio_near_dups
-
-    rows = []
-    for seed in range(3):
-        s = _tone_mix(seed)
-        rows.append((f"a{seed}", bytearray(_encode_wav(s, 8000))))
-        quieter = np.round(s.astype(np.float64) * 0.37).astype(np.int16)
-        rows.append((f"b{seed}", bytearray(_encode_wav(quieter, 8000))))
-    rows.append(("junk", bytearray(b"RIFFxxxxWAVE")))
-    df = spark.createDataFrame(rows, "media_id string, blob binary")
-    pairs = {(r["media_a"], r["media_b"])
-             for r in audio_near_dups(df, max_hamming=6).collect()}
-    expect = {(f"a{s}", f"b{s}") for s in range(3)}
-    assert pairs == expect, pairs
-
-
-# ---- round 4: real MJPEG-in-AVI video frame decode ------------------------
-
-def _encode_avi_mjpeg(jpeg_frames, w, h, fps=10):
-    """Minimal AVI writer for the test: LIST hdrl (avih) + LIST movi
-    with one 00dc chunk per JPEG frame."""
-    import struct as st
-
-    def chunk(cid, body):
-        return cid + st.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    avih = st.pack("<IIIII", 1_000_000 // fps, 0, 0, 0, len(jpeg_frames))
-    avih += st.pack("<III", 0, 1, 0) + st.pack("<II", w, h) + b"\x00" * 16
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
-    movi_body = b"movi" + b"".join(chunk(b"00dc", f) for f in jpeg_frames)
-    movi = chunk(b"LIST", movi_body)
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + st.pack("<I", len(body)) + body
-
-
-def test_avi_mjpeg_frames_and_metadata(spark):
-    import numpy as np
-
-    from driftmind_spark.kernels.imagecodec import decode_jpeg_pixels
-    from driftmind_spark.operators.multimodal import decode_avi_mjpeg_frames
-    from tests.test_jpeg_codec import _encode_jpeg
-
-    rng = np.random.RandomState(71)
-    imgs = [rng.randint(0, 256, size=(16, 24, 3)).astype(np.uint8)
-            for _ in range(3)]
-    jpegs = [_encode_jpeg(im) for im in imgs]
-    avi = _encode_avi_mjpeg(jpegs, 24, 16, fps=5)
-
-    frames = decode_avi_mjpeg_frames(avi, max_frames=8)
-    assert len(frames) == 3
-    for f, j in zip(frames, jpegs):
-        assert np.array_equal(f, decode_jpeg_pixels(j))
-
-    df = spark.createDataFrame(
-        [("v1", bytearray(avi))], "media_id string, blob binary"
-    )
-    meta = media_metadata(df).collect()[0]
-    assert meta["format"] == "avi"
-    assert (meta["width"], meta["height"]) == (24, 16)
-    assert meta["duration_ms"] == 600  # 3 frames at 5 fps
-
-    got = {r["frame_index"]: bytes(r["frame"])
-           for r in sample_frames(df, max_frames=8).collect()}
-    assert len(got) == 3
-    for i, j in enumerate(jpegs):
-        assert got[i] == decode_jpeg_pixels(j).tobytes()
-
-
-def test_avi_nested_rec_lists_decode(spark):
-    """Interleaved AVIs wrap frame groups in nested LIST 'rec ' inside
-    'movi'; the walk must recurse into them instead of reporting 'no
-    MJPEG frames found' (round-5 advice item)."""
-    import struct as st
-
-    import numpy as np
-
-    from driftmind_spark.kernels.imagecodec import decode_jpeg_pixels
-    from driftmind_spark.operators.multimodal import decode_avi_mjpeg_frames
-    from tests.test_jpeg_codec import _encode_jpeg
-
-    def chunk(cid, body):
-        return cid + st.pack("<I", len(body)) + body + (b"\x00" * (len(body) & 1))
-
-    rng = np.random.RandomState(73)
-    imgs = [rng.randint(0, 256, size=(8, 8, 3)).astype(np.uint8)
-            for _ in range(2)]
-    jpegs = [_encode_jpeg(im) for im in imgs]
-    avih = st.pack("<IIIII", 100_000, 0, 0, 0, 2)
-    avih += st.pack("<III", 0, 1, 0) + st.pack("<II", 8, 8) + b"\x00" * 16
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
-    # each frame wrapped in its own LIST 'rec ' group
-    movi_body = b"movi" + b"".join(
-        chunk(b"LIST", b"rec " + chunk(b"00dc", f)) for f in jpegs
-    )
-    body = b"AVI " + hdrl + chunk(b"LIST", movi_body)
-    avi = b"RIFF" + st.pack("<I", len(body)) + body
-
-    frames = decode_avi_mjpeg_frames(avi, max_frames=4)
-    assert len(frames) == 2
-    for got, j in zip(frames, jpegs):
-        assert np.array_equal(got, decode_jpeg_pixels(j))
-
-    # and through the Spark operator: decoded pixel bands, marked as such
-    df = spark.createDataFrame(
-        [("vr", bytearray(avi))], "media_id string, blob binary"
-    )
-    rows = sample_frames(df, max_frames=4).collect()
-    assert {r["kind"] for r in rows} == {"pixels"}
-
-
-def test_avi_non_mjpeg_falls_back(spark):
-    """An AVI whose video chunks aren't JPEG (e.g. H.264) keeps the
-    byte-range stand-in instead of crashing."""
-    avi = _encode_avi_mjpeg([b"\x00\x00\x00\x01garbage-nal"], 8, 8)
-    df = spark.createDataFrame(
-        [("v2", bytearray(avi))], "media_id string, blob binary"
-    )
-    out = sample_frames(df, every_n_bytes=16, max_frames=2).collect()
-    assert len(out) >= 1  # fallback produced byte-range frames
-    # the stand-in is self-describing, never mistakable for pixel bands
-    assert all(r["kind"] == "bytes" for r in out)
-
-
-def test_wav_g711_mulaw_alaw_match_audioop():
-    """G.711 mu-law/A-law expansion must agree byte-for-byte with
-    CPython's audioop (the independent stdlib implementation)."""
-    import struct as st
-
-    import audioop
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_wav_samples
-
-    pcm = _tone_mix(7, n=3000)[:, 0].astype("<i2")
-    for tag, enc_fn, dec_fn in (
-        (7, audioop.lin2ulaw, audioop.ulaw2lin),
-        (6, audioop.lin2alaw, audioop.alaw2lin),
-    ):
-        enc = enc_fn(pcm.tobytes(), 2)
-        fmt = st.pack("<HHIIHH", tag, 1, 8000, 8000, 1, 8)
-        wav = (b"RIFF" + st.pack("<I", 4 + 8 + len(fmt) + 8 + len(enc))
-               + b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-               + b"data" + st.pack("<I", len(enc)) + enc)
-        got, rate = decode_wav_samples(wav)
-        expect = np.frombuffer(dec_fn(enc, 2), dtype="<i2")
-        assert rate == 8000
-        assert np.array_equal(got[:, 0], expect), f"tag {tag} mismatch"
-
-
-def _mp3_frame_bytes(ver_bits, layer_bits, br_idx, sr_idx, mono,
-                     bitrate, rate, layer, mpeg1):
-    import struct as st
-
-    b2 = 0xE0 | (ver_bits << 3) | (layer_bits << 1)
-    b3 = (br_idx << 4) | (sr_idx << 2)
-    b4 = 0xC0 if mono else 0x00
-    if layer == 1:
-        size = (12 * bitrate // rate) * 4
-        samples = 384
-    else:
-        samples = 1152 if (layer == 2 or mpeg1) else 576
-        size = samples // 8 * bitrate // rate
-    hdr = st.pack("BBBB", 0xFF, b2, b3, b4)
-    return hdr + b"\x00" * (size - 4), samples
-
-
-def test_mp3_metadata_properties(spark):
-    """MP3 frame-header walk (round 5): ID3v2 skip, per-frame sizing
-    from the bitrate/rate fields, duration from summed frame samples —
-    MPEG1 stereo and MPEG2 mono, with leading junk resync and an ID3v1
-    trailer.  Sample decode remains the honest seam."""
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import (
-        _mp3_properties,
-        _sniff_format,
-        media_metadata,
-    )
-
-    # MPEG1 Layer III, 128 kbps, 44100 Hz, stereo: 417-byte frames
-    frame, samples = _mp3_frame_bytes(3, 1, 9, 0, False, 128000, 44100, 3, True)
-    assert len(frame) == 417
-    id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 0, 20]) + b"\x00" * 20
-    blob = id3 + frame * 38 + b"TAG" + b"\x00" * 125  # ID3v1 trailer
-    dur, rate, ch = _mp3_properties(blob)
-    assert rate == 44100 and ch == 2
-    assert dur == int(38 * samples * 1000 / 44100)
-    assert _sniff_format(blob) == "mp3"
-
-    # MPEG2 Layer III, 64 kbps, 22050 Hz, mono, leading garbage
-    frame2, samples2 = _mp3_frame_bytes(2, 1, 8, 0, True, 64000, 22050, 3, False)
-    blob2 = b"\x01\x02junk" + frame2 * 10
-    dur2, rate2, ch2 = _mp3_properties(blob2)
-    assert rate2 == 22050 and ch2 == 1
-    assert dur2 == int(10 * samples2 * 1000 / 22050)
-
-    # through the Spark operator (sniff needs ID3 or a frame at byte 0)
-    df = spark.createDataFrame(
-        [("a1", bytearray(blob)), ("a2", bytearray(frame2 * 10))],
-        "media_id string, blob binary",
-    )
-    meta = {r["media_id"]: r for r in media_metadata(df).collect()}
-    assert meta["a1"]["format"] == "mp3"
-    assert meta["a1"]["duration_ms"] == dur
-    assert meta["a1"]["sample_rate"] == 44100 and meta["a1"]["channels"] == 2
-    assert meta["a2"]["format"] == "mp3"
-    assert meta["a2"]["duration_ms"] == dur2 and meta["a2"]["channels"] == 1
-
-
-def test_wav_ms_adpcm_roundtrip():
-    """MS-ADPCM (tag 2): an independent in-test encoder quantizes real
-    waveforms and tracks its own reconstruction (inverting the decoder
-    walk, as the JPEG tests do); the decoder must reproduce that
-    reconstruction exactly — mono and stereo, multiple blocks,
-    per-channel predictor choices."""
-    import struct as st
-
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_wav_samples
-
-    COEF1 = [256, 512, 0, 192, 240, 460, 392]
-    COEF2 = [0, -256, 0, 64, 0, -208, -232]
-    ADAPT = [230, 230, 230, 230, 307, 409, 512, 614,
-             768, 614, 512, 409, 307, 230, 230, 230]
-
-    def encode(samples, rate, spb, preds):
-        n, ch = samples.shape
-        data_bytes = -(-(spb - 2) * ch // 2)
-        ba = 7 * ch + data_bytes
-        payload = b""
-        recon = [[] for _ in range(ch)]
-        for b0 in range(0, n - spb + 1, spb):
-            blk = samples[b0:b0 + spb]
-            delta = [128] * ch
-            s2 = [int(blk[0, c]) for c in range(ch)]
-            s1 = [int(blk[1, c]) for c in range(ch)]
-            for c in range(ch):
-                recon[c] += [s2[c], s1[c]]
-            hdr = bytes(preds[c] for c in range(ch))
-            hdr += b"".join(st.pack("<h", delta[c]) for c in range(ch))
-            hdr += b"".join(st.pack("<h", s1[c]) for c in range(ch))
-            hdr += b"".join(st.pack("<h", s2[c]) for c in range(ch))
-            nibs = []
-            for i in range(2, spb):
-                for c in range(ch):
-                    q = (s1[c] * COEF1[preds[c]]
-                         + s2[c] * COEF2[preds[c]])
-                    pred = q >> 8 if q >= 0 else -((-q) >> 8)  # trunc to 0
-                    e = max(-8, min(7, round((int(blk[i, c]) - pred)
-                                             / delta[c])))
-                    samp = max(-32768, min(32767, pred + e * delta[c]))
-                    nib = e & 0xF
-                    s2[c], s1[c] = s1[c], samp
-                    delta[c] = max(16, (ADAPT[nib] * delta[c]) >> 8)
-                    recon[c].append(samp)
-                    nibs.append(nib)
-            if len(nibs) % 2:
-                nibs.append(0)
-            body = bytes((nibs[j] << 4) | nibs[j + 1]
-                         for j in range(0, len(nibs), 2))
-            payload += hdr + body.ljust(data_bytes, b"\x00")
-        fmt = st.pack("<HHIIHHHH", 2, ch, rate, rate * ba // spb, ba, 4,
-                      2, spb)
-        wav = (b"RIFF" + st.pack("<I", 4 + 8 + len(fmt) + 8 + len(payload))
-               + b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-               + b"data" + st.pack("<I", len(payload)) + payload)
-        return wav, np.array(recon, dtype=np.int16).T
-
-    rng = np.random.RandomState(97)
-    t = np.arange(300) / 8000.0
-    mono = (8000 * np.sin(2 * np.pi * 440 * t)
-            + rng.randint(-500, 500, size=300)).astype(np.int16)[:, None]
-    wav, recon = encode(mono, 8000, spb=100, preds=[0])
-    got, rate = decode_wav_samples(wav)
-    assert rate == 8000
-    assert np.array_equal(got, recon)
-    # reconstruction tracks the source (sanity that the codec is lossy
-    # but faithful, not just self-consistent)
-    err = np.abs(recon[:, 0].astype(np.int32) - mono[: len(recon), 0])
-    assert np.median(err) < 2000
-
-    stereo = np.stack([
-        (6000 * np.sin(2 * np.pi * 300 * t)).astype(np.int16),
-        (5000 * np.sin(2 * np.pi * 700 * t + 1.0)).astype(np.int16),
-    ], axis=1)
-    wav2, recon2 = encode(stereo, 16000, spb=60, preds=[1, 4])
-    got2, rate2 = decode_wav_samples(wav2)
-    assert rate2 == 16000
-    assert np.array_equal(got2, recon2)
-
-
-def test_wav_ima_adpcm_matches_audioop():
-    """IMA-ADPCM block decode vs CPython's audioop DVI decoder on the
-    SAME nibble streams (audioop packs high-nibble-first and takes the
-    block header as its seed state) — random streams, mono and stereo."""
-    import struct as st
-
-    import audioop
-    import numpy as np
-
-    from driftmind_spark.operators.multimodal import decode_wav_samples
-
-    rng = np.random.RandomState(91)
-
-    def wav(channels, block_align, spb, payload):
-        fmt = st.pack("<HHIIHHHH", 0x11, channels, 8000,
-                      8000 * block_align // (spb or 1), block_align, 4, 2, spb)
-        return (b"RIFF" + st.pack("<I", 4 + 8 + len(fmt) + 8 + len(payload))
-                + b"WAVE" + b"fmt " + st.pack("<I", len(fmt)) + fmt
-                + b"data" + st.pack("<I", len(payload)) + payload)
-
-    def oracle_channel(pred, idx, nib_bytes):
-        swapped = bytes(((b << 4) | (b >> 4)) & 0xFF for b in nib_bytes)
-        dec, _ = audioop.adpcm2lin(swapped, 2, (pred, idx))
-        return [pred] + list(np.frombuffer(dec, "<i2"))
-
-    # mono: 3 blocks of 32 data bytes -> 65 samples/block
-    ba, spb = 4 + 32, 65
-    payload = b""
-    expect = []
-    for _ in range(3):
-        pred = int(rng.randint(-30000, 30000))
-        idx = int(rng.randint(0, 89))
-        data = bytes(int(x) for x in rng.randint(0, 256, size=32))
-        payload += st.pack("<hBB", pred, idx, 0) + data
-        expect.extend(oracle_channel(pred, idx, data))
-    got, rate = decode_wav_samples(wav(1, ba, spb, payload))
-    assert rate == 8000
-    assert got[:, 0].tolist() == expect
-
-    # stereo: words interleave channels in 4-byte groups
-    ba2, spb2 = 8 + 32, 17  # 16 data bytes/channel -> 33 nibs... 4 words
-    payload2 = b""
-    exp_ch = [[], []]
-    for _ in range(2):
-        hdrs = []
-        streams = [b"", b""]
-        for c in range(2):
-            pred = int(rng.randint(-30000, 30000))
-            idx = int(rng.randint(0, 89))
-            hdrs.append(st.pack("<hBB", pred, idx, 0))
-            data = bytes(int(x) for x in rng.randint(0, 256, size=16))
-            streams[c] = data
-            exp_ch[c].extend(oracle_channel(pred, idx, data)[:spb2])
-        words = b"".join(
-            streams[0][w:w + 4] + streams[1][w:w + 4]
-            for w in range(0, 16, 4)
-        )
-        payload2 += b"".join(hdrs) + words
-    got2, _ = decode_wav_samples(wav(2, ba2, spb2, payload2))
-    assert got2[:, 0].tolist() == exp_ch[0]
-    assert got2[:, 1].tolist() == exp_ch[1]
-
-
-def test_sniff_mp3_requires_second_frame():
-    """Round-6 advice fix: one plausible MPEG header is weak evidence —
-    arbitrary binary can hit the sync+bitrate bits.  Sniffing 'mp3' for
-    a bare stream now requires a second consecutive valid frame (or a
-    stream that is exactly one complete frame)."""
-    from driftmind_spark.operators.multimodal import _sniff_format
-
-    # plausible lone header followed by garbage: NOT mp3 anymore
-    fake = b"\xff\xe2\x10\x00" + bytes(range(200))
-    assert _sniff_format(fake) is None
-
-    # real two-frame stream: still mp3
-    frame, _ = _mp3_frame_bytes(3, 1, 9, 0, False, 128000, 44100, 3, True)
-    assert _sniff_format(frame * 2) == "mp3"
-    # exactly one complete frame: accepted (size == len)
-    assert _sniff_format(frame) == "mp3"
-    # one frame + trailing garbage shorter than a header: rejected
-    assert _sniff_format(frame + b"\x00\x01") is None
 
 
 def test_fold_bucket_emits_saturation_signal():
